@@ -1,8 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit, typedlit}
@@ -887,28 +890,71 @@ case class NearestCentroid(first: Expression, second: Expression,
 
 object NativeFunctions {
 
-  /** Idempotent session registration; exposes `dot_product` to SQL too.
-    * Skips only when the registered `dot_product` already RESOLVES TO OURS
-    * (avoids the re-registration WARN every operator call would otherwise
-    * log) — a same-named foreign function gets replaced, so the similarity
-    * operators can never silently compute through someone else's
-    * implementation. [[graft.GraftExtensions]] is the config-time
-    * alternative.
+  /** Every SQL name graft exposes, one entry each, in the
+    * `(FunctionIdentifier, ExpressionInfo, FunctionBuilder)` shape that
+    * `SparkSessionExtensions` injects. Both registration paths read it:
+    * [[graft.GraftExtensions]] injects it at session build, and
+    * [[register]] installs it lazily from operator code. Every builder
+    * checks its arity first and resolves knob arguments to plan constants.
     */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val probe = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array(0.0), ArrayType(DoubleType, containsNull = false))
-        registry.lookupFunction(ident, Seq(probe, probe)).isInstanceOf[DotProduct]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction(
-        "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+  private[graft] val table: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    entry("dot_product", classOf[DotProduct], 2)((e, _) => DotProduct(e(0), e(1))),
+    entry("hyperplane_signatures", classOf[HyperplaneSignatures], 4)((e, knob) =>
+      HyperplaneSignatures(e(0), e(1), knob(2, "planesPerTable"), knob(3, "tables"))),
+    entry("nearest_centroid_cos", classOf[NearestCentroid], 3)((e, _) =>
+      NearestCentroid(e(0), e(1), e(2), useVnorm = true)),
+    entry("nearest_centroid_dot", classOf[NearestCentroid], 3)((e, _) =>
+      NearestCentroid(e(0), e(1), e(2), useVnorm = false)),
+    entry("word_shingles", classOf[WordShingles], 2)((e, knob) =>
+      WordShingles(e(0), knob(1, "k"))),
+    entry("char_qgrams", classOf[CharQgrams], 2)((e, knob) =>
+      CharQgrams(e(0), knob(1, "q"))),
+    entry("log_lin_code", classOf[LogLinCode], 1)((e, _) => LogLinCode(e(0))),
+    entry("pq_codes", classOf[PqCodes], 4)((e, knob) =>
+      PqCodes(e(0), e(1), knob(2, "subspaces"), knob(3, "k"))),
+    entry("gear_chunk_ends", classOf[GearChunkEnds], 2, 4)((e, knob) =>
+      if (e.length == 4)
+        GearChunkEnds(e(0), knob(1, "maskBits"), knob(2, "minSize"), knob(3, "maxSize"))
+      else GearChunkEnds(e(0), knob(1, "maskBits"))),
+    entry("hilbert_key", classOf[HilbertIndex], 3)((e, knob) =>
+      HilbertIndex(e(0), e(1), knob(2, "bits"))),
+    entry("graft_bloom_agg", classOf[BloomFilterAggregate], 3)((e, _) =>
+      new BloomFilterAggregate(e(0), e(1), e(2))),
+    entry("graft_might_contain", classOf[BloomFilterMightContain], 2)((e, _) =>
+      BloomFilterMightContain(e(0), e(1))))
+
+  /** A [[table]] entry whose builder raises WRONG_NUM_ARGS outside
+    * `arities` and hands `build` the arguments plus `knob(i, param)`, the
+    * Int value of constant argument i.
+    */
+  private def entry(name: String, cls: Class[_], arities: Int*)(
+      build: (Seq[Expression], (Int, String) => Int) => Expression)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = {
+    val builder: FunctionBuilder = { exprs =>
+      requireArity(name, arities, exprs.length)
+      build(exprs, (i, param) => intConstArg(name, param, exprs(i)))
     }
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
   }
+
+  /** Idempotent session registration of every [[table]] entry; the lazy
+    * alternative to [[graft.GraftExtensions]]. An entry is skipped only
+    * when the registry already holds that very builder instance, so a
+    * session built with the extension never re-registers, and two threads
+    * racing on first use write the same (info, builder) pair, which never
+    * logs the "replaced a previously registered function" WARN. A
+    * same-named foreign function holds a different builder and gets
+    * replaced, so the operators can never compute through someone else's
+    * implementation.
+    */
+  def register(spark: SparkSession): Unit =
+    register(spark.sessionState.functionRegistry)
+
+  private[graft] def register(registry: FunctionRegistry): Unit =
+    table.foreach { case (id, info, builder) =>
+      if (!registry.lookupFunctionBuilder(id).exists(_ eq builder))
+        registry.registerFunction(id, info, builder)
+    }
 
   def dotProduct(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)
@@ -922,29 +968,10 @@ object NativeFunctions {
     * coalesces a null input to the HOF form's empty array.
     */
   def wordShinglesFused(spark: SparkSession, toks: Column, k: Int): Column = {
-    registerWordShingles(spark)
+    register(spark)
     org.apache.spark.sql.functions.coalesce(
       call_function("word_shingles", toks, lit(k)),
       typedlit(Array.empty[String]))
-  }
-
-  private def registerWordShingles(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("word_shingles")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array("a"), ArrayType(org.apache.spark.sql.types.StringType))
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(arr, one))
-          .isInstanceOf[WordShingles]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("word_shingles", { exprs =>
-        requireArity("word_shingles", Seq(2), exprs.length)
-        WordShingles(exprs(0), intConstArg("word_shingles", "k", exprs(1)))
-      }, "built-in")
-    }
   }
 
   /** Character q-grams via the fused native loop (registers on first use;
@@ -955,29 +982,10 @@ object NativeFunctions {
     * edge stays bit-identical anyway).
     */
   def charQgramsFused(spark: SparkSession, s: Column, q: Int): Column = {
-    registerCharQgrams(spark)
+    register(spark)
     org.apache.spark.sql.functions.when(s.isNull,
       org.apache.spark.sql.functions.array(s))
       .otherwise(call_function("char_qgrams", s, lit(q)))
-  }
-
-  private def registerCharQgrams(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("char_qgrams")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val str = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          "a", org.apache.spark.sql.types.StringType)
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(str, one))
-          .isInstanceOf[CharQgrams]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("char_qgrams", { exprs =>
-        requireArity("char_qgrams", Seq(2), exprs.length)
-        CharQgrams(exprs(0), intConstArg("char_qgrams", "q", exprs(1)))
-      }, "built-in")
-    }
   }
 
   /** Log-linear sketch code via the native expression (registers on first
@@ -985,23 +993,8 @@ object NativeFunctions {
     * [[graft.operators.Sketches.logLinCode]]).
     */
   def logLinCode(spark: SparkSession, v: Column): Column = {
-    registerLogLin(spark)
+    register(spark)
     call_function("log_lin_code", v)
-  }
-
-  private def registerLogLin(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("log_lin_code")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        registry.lookupFunction(ident, Seq(
-          org.apache.spark.sql.catalyst.expressions.Literal(1.0)))
-          .isInstanceOf[LogLinCode]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction(
-        "log_lin_code", exprs => LogLinCode(exprs(0)), "built-in")
-    }
   }
 
   /** All `tables` LSH signatures of `vec` against the flattened row-major
@@ -1010,7 +1003,7 @@ object NativeFunctions {
   def hyperplaneSignatures(spark: SparkSession, vec: Column,
                            flatPlanes: Array[Double],
                            planesPerTable: Int, tables: Int): Column = {
-    registerSignatures(spark)
+    register(spark)
     // typedlit: containsNull=false element type (lit() declares true), so
     // the fused loop's per-element null branch keys off the vector side only
     call_function("hyperplane_signatures", vec, typedlit(flatPlanes),
@@ -1024,32 +1017,11 @@ object NativeFunctions {
     */
   def pqCodes(spark: SparkSession, vec: Column,
               cbs: Seq[Array[Array[Double]]]): Column = {
-    registerPqCodes(spark)
+    register(spark)
     org.apache.spark.sql.functions.coalesce(
       call_function("pq_codes", vec, typedlit(cbs.flatten.flatten.toArray),
         lit(cbs.length), lit(cbs.head.length)),
       typedlit(Array.fill(cbs.length)(0L)))
-  }
-
-  private def registerPqCodes(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("pq_codes")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array(0.0), ArrayType(DoubleType, containsNull = false))
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(arr, arr, one, one))
-          .isInstanceOf[PqCodes]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("pq_codes", { exprs =>
-        requireArity("pq_codes", Seq(4), exprs.length)
-        PqCodes(exprs(0), exprs(1),
-          intConstArg("pq_codes", "subspaces", exprs(2)),
-          intConstArg("pq_codes", "k", exprs(3)))
-      }, "built-in")
-    }
   }
 
   /** Nearest-centroid id by the fused argmax loop (see [[NearestCentroid]]).
@@ -1059,7 +1031,7 @@ object NativeFunctions {
   def nearestCentroid(spark: SparkSession, vec: Column,
                       flatCents: Array[Double], norms: Array[Double],
                       useVnorm: Boolean): Column = {
-    registerNearest(spark)
+    register(spark)
     // typedlit (containsNull=false): keeps the argmax loop branch-free —
     // the null-element guard compiles in only for genuinely nullable args
     call_function(
@@ -1067,43 +1039,15 @@ object NativeFunctions {
       vec, typedlit(flatCents), typedlit(norms))
   }
 
-  private def registerNearest(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    Seq(("nearest_centroid_cos", true), ("nearest_centroid_dot", false)).foreach {
-      case (name, useVnorm) =>
-        val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-        val alreadyOurs = registry.functionExists(ident) &&
-          (try {
-            val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-              Array(0.0), ArrayType(DoubleType, containsNull = false))
-            registry.lookupFunction(ident, Seq(arr, arr, arr)) match {
-              case NearestCentroid(_, _, _, u) => u == useVnorm
-              case _ => false
-            }
-          } catch { case _: Throwable => false })
-        if (!alreadyOurs) {
-          registry.createOrReplaceTempFunction(name, exprs =>
-            NearestCentroid(exprs(0), exprs(1), exprs(2), useVnorm), "built-in")
-        }
-    }
-  }
-
-  /** Resolve a knob argument of `hyperplane_signatures` to its Int value at
-    * function-build time (the knobs shape the expression, so they must be
-    * plan constants). A bare `exprs(i).eval().asInstanceOf[Int]` threw an
-    * unreadable unbound-attribute UnsupportedOperationException on column
-    * arguments and a ClassCastException on LONG literals (ADVICE r9); this
-    * raises the standard NON_FOLDABLE_ARGUMENT AnalysisException instead.
+  /** Arity check for the [[table]] builders: the registry hands a builder
+    * whatever argument list the query wrote, and an unchecked `exprs(i)`
+    * surfaces as IndexOutOfBoundsException — or worse, silently ignores an
+    * argument (ADVICE r11: `gear_chunk_ends(payload, maskBits, minSize)`
+    * dropped minSize). Raises the standard WRONG_NUM_ARGS
+    * AnalysisException instead.
     */
-  /** Arity check for SQL-registered builders: `createOrReplaceTempFunction`
-    * hands the builder whatever argument list the query wrote, and an
-    * unchecked `exprs(i)` surfaces as IndexOutOfBoundsException — or worse,
-    * silently ignores an argument when a fallback branch matches (ADVICE
-    * r11: `gear_chunk_ends(payload, maskBits, minSize)` dropped minSize).
-    * Raises the standard WRONG_NUM_ARGS AnalysisException instead.
-    */
-  private[graft] def requireArity(funcName: String, allowed: Seq[Int],
-                                  actual: Int): Unit =
+  private def requireArity(funcName: String, allowed: Seq[Int],
+                           actual: Int): Unit =
     if (!allowed.contains(actual))
       throw new org.apache.spark.sql.AnalysisException(
         errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
@@ -1113,8 +1057,15 @@ object NativeFunctions {
           "actualNum" -> actual.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"))
 
-  private[graft] def intConstArg(funcName: String, paramName: String,
-                                 e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
+  /** Resolve a knob argument to its Int value at function-build time (the
+    * knobs shape the expression, so they must be plan constants). A bare
+    * `exprs(i).eval().asInstanceOf[Int]` threw an unreadable
+    * unbound-attribute UnsupportedOperationException on column arguments
+    * and a ClassCastException on LONG literals (ADVICE r9); this raises the
+    * standard NON_FOLDABLE_ARGUMENT AnalysisException instead.
+    */
+  private def intConstArg(funcName: String, paramName: String,
+                          e: Expression): Int = {
     def fail() = throw new org.apache.spark.sql.AnalysisException(
       errorClass = "NON_FOLDABLE_ARGUMENT",
       messageParameters = Map(
@@ -1132,51 +1083,6 @@ object NativeFunctions {
     }
   }
 
-  private def registerSignatures(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("hyperplane_signatures")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array(0.0), ArrayType(DoubleType, containsNull = false))
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(arr, arr, one, one))
-          .isInstanceOf[HyperplaneSignatures]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("hyperplane_signatures", exprs =>
-        HyperplaneSignatures(exprs(0), exprs(1),
-          intConstArg("hyperplane_signatures", "planesPerTable", exprs(2)),
-          intConstArg("hyperplane_signatures", "tables", exprs(3))),
-        "built-in")
-    }
-  }
-
-  private def registerGear(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("gear_chunk_ends")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val blob = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array.empty[Byte], org.apache.spark.sql.types.BinaryType)
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(6)
-        registry.lookupFunction(ident, Seq(blob, one))
-          .isInstanceOf[GearChunkEnds]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("gear_chunk_ends", { exprs =>
-        requireArity("gear_chunk_ends", Seq(2, 4), exprs.length)
-        if (exprs.length == 4)
-          GearChunkEnds(exprs(0),
-            intConstArg("gear_chunk_ends", "maskBits", exprs(1)),
-            intConstArg("gear_chunk_ends", "minSize", exprs(2)),
-            intConstArg("gear_chunk_ends", "maxSize", exprs(3)))
-        else GearChunkEnds(exprs(0),
-          intConstArg("gear_chunk_ends", "maskBits", exprs(1)))
-      }, "built-in")
-    }
-  }
-
   /** Gear content-defined chunk end positions of a BINARY payload (see
     * [[GearChunkEnds]]); `minSize`/`maxSize` bound chunk lengths (the
     * FastCDC-shaped production form — defaults are the unbounded pure
@@ -1185,14 +1091,21 @@ object NativeFunctions {
   def gearChunkEnds(spark: SparkSession, payload: Column, maskBits: Int,
                     minSize: Int = 1,
                     maxSize: Int = Int.MaxValue): Column = {
-    registerGear(spark)
+    register(spark)
     if (minSize == 1 && maxSize == Int.MaxValue)
       call_function("gear_chunk_ends", payload, lit(maskBits))
     else call_function("gear_chunk_ends", payload, lit(maskBits),
       lit(minSize), lit(maxSize))
   }
 
-  /** Spark's own runtime-filter primitives — `BloomFilterAggregate` /
+  /** Build a bloom filter over `hash` (a LONG column, conventionally
+    * `xxhash64(...)`) across all rows of `df`, returning the serialized
+    * sketch (`BloomFilterImpl` format, the one [[mightContain]] reads).
+    * Runs one job over `df` — call it on the SMALL side of a planned
+    * reduction. Returns null on empty input (no rows → no sketch).
+    *
+    * `graft_bloom_agg` / `graft_might_contain` are Spark's own
+    * runtime-filter primitives — `BloomFilterAggregate` /
     * `BloomFilterMightContain`, the expression pair `InjectRuntimeFilter`
     * plants to prune a shuffle join's probe side — exposed as callable
     * functions (they are not in the public registry). An operator can then
@@ -1202,35 +1115,6 @@ object NativeFunctions {
     * entire small table, not a filtered one. Both expressions are
     * codegen-friendly; the sketch rides the plan as a BINARY literal and
     * ships to executors once with the task closure.
-    */
-  private def registerBloom(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val bloomProbe = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          null, org.apache.spark.sql.types.BinaryType)
-        val valueProbe = org.apache.spark.sql.catalyst.expressions.Literal(0L)
-        registry.lookupFunction(ident, Seq(bloomProbe, valueProbe))
-          .isInstanceOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("graft_bloom_agg",
-        exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-        "built-in")
-      registry.createOrReplaceTempFunction("graft_might_contain",
-        exprs => org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1)),
-        "built-in")
-    }
-  }
-
-  /** Build a bloom filter over `hash` (a LONG column, conventionally
-    * `xxhash64(...)`) across all rows of `df`, returning the serialized
-    * sketch (`BloomFilterImpl` format, the one [[mightContain]] reads).
-    * Runs one job over `df` — call it on the SMALL side of a planned
-    * reduction. Returns null on empty input (no rows → no sketch).
     *
     * Sizing is a cost knob, never a correctness one: oversizing `numBits`
     * costs sketch bytes, undersizing costs false-positive probe rows that
@@ -1238,7 +1122,7 @@ object NativeFunctions {
     */
   def bloomAggBytes(df: org.apache.spark.sql.DataFrame, hash: Column,
                     expectedItems: Long, numBits: Long): Array[Byte] = {
-    registerBloom(df.sparkSession)
+    register(df.sparkSession)
     df.select(call_function("graft_bloom_agg", hash,
         lit(expectedItems), lit(numBits)))
       .head().getAs[Array[Byte]](0)
@@ -1253,7 +1137,7 @@ object NativeFunctions {
   def mightContain(spark: SparkSession, bloom: Array[Byte], hash: Column): Column =
     if (bloom == null) lit(false)
     else {
-      registerBloom(spark)
+      register(spark)
       call_function("graft_might_contain", lit(bloom), hash)
     }
 }

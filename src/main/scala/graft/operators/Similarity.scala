@@ -1074,17 +1074,26 @@ object Similarity {
     * §HyperplaneSignatures — Janino method budget) and ran every plane
     * interpreted: measured 1.1 s single-task for a 1.7k-row corpus side
     * where the fused loop is milliseconds. Packing is spec-pinned
-    * bit-identical (MSB-first per band, row-major plane order). Null edge,
-    * as in d06: a null/ragged vector now yields a NULL code array (its
-    * band rows drop at the posexplode) instead of all-zero codes — vectors
-    * are non-null by the embeddings contract, and a null vector has no
-    * meaningful code either way.
+    * bit-identical (MSB-first per band, row-major plane order). Null edge:
+    * vectors are non-null by the embeddings contract, and a null vector,
+    * one with a null element or one whose dimension differs from the
+    * planes' has no meaningful code. The fused loop yields NULL for those,
+    * and the row would silently vanish at the band posexplode, so the NULL
+    * raises a named error instead (`coalesce` evaluates `raise_error` only
+    * on such a row; well-formed rows pay nothing). Zero-dimension planes
+    * mean the corpus they came from held no vector, so nothing can match
+    * and the NULL codes stay: an empty corpus gives an empty result.
     */
   private[graft] def mihCodeArray(spark: org.apache.spark.sql.SparkSession,
                                   v: Column, signs: Array[Array[Double]],
-                                  bands: Int, bandBits: Int): Column =
-    graft.functions.NativeFunctions.hyperplaneSignatures(
+                                  bands: Int, bandBits: Int): Column = {
+    val code = graft.functions.NativeFunctions.hyperplaneSignatures(
       spark, v, signs.flatten, bandBits, bands)
+    val dim = signs.head.length
+    if (dim == 0) code
+    else coalesce(code, raise_error(lit(s"mihCodeArray: vector column $v holds " +
+      s"a null vector, a null element or a vector whose dimension is not $dim")))
+  }
 
   /** Full-code Hamming distance between two band-code arrays: Σ over bands
     * of bit_count(xor) — pure integer arithmetic, one codegen projection.

@@ -229,6 +229,26 @@ class ExtensionSpec extends SparkSpec {
     assert(t5a === t5b && t5a.nonEmpty)
   }
 
+  test("MIH: a null or wrong-dimension vector fails loudly, never drops its row") {
+    import spark.implicits._
+    val good = (1L to 6L).map(i => (i, Seq(i.toDouble, 1.0, -1.0, 0.5)))
+    for (bad <- Seq((7L, null: Seq[Double]), (8L, Seq(1.0, 2.0)))) {
+      val corpus = (good :+ bad).toDF("vec_id", "embedding")
+      val e = intercept[Exception] {
+        Similarity.mihHammingNeighbors(corpus.filter(col("vec_id") <= 2L),
+          corpus, "vec_id", "embedding", 3).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(msgs.contains("mihCodeArray") && msgs.contains("embedding"),
+        s"vector ${bad._1}: $msgs")
+    }
+    // an empty corpus is not malformed: no neighbors, no error
+    val empty = good.toDF("vec_id", "embedding").limit(0)
+    assert(Similarity.mihHammingNeighbors(good.toDF("vec_id", "embedding"),
+      empty, "vec_id", "embedding", 3).count() === 0)
+  }
+
   test("MIH screen: equals brute-force band-sharing pairs within radius") {
     val codes = mihCodes
     val fresh = codes.keySet.filter(_ % 8 == 0)

@@ -2,20 +2,49 @@ package graft
 
 import org.apache.spark.sql.{GraftExtensionsProbe, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions.NativeFunctions
 
 class GraftExtensionsSpec extends SparkSpec {
 
+  /** Every SQL name graft exposes; a pure-SQL session must see all of them. */
+  private val graftNames = Set(
+    "dot_product", "hyperplane_signatures", "nearest_centroid_cos",
+    "nearest_centroid_dot", "word_shingles", "char_qgrams", "log_lin_code",
+    "pq_codes", "gear_chunk_ends", "hilbert_key", "graft_bloom_agg",
+    "graft_might_contain")
+
   test("GraftExtensions injects dot_product at session-extension time") {
+    // an empty registry that counts writes: after the injections it holds
+    // exactly the extension's names
+    var writes = 0
+    val registry = new SimpleFunctionRegistry {
+      override def registerFunction(name: FunctionIdentifier, info: ExpressionInfo,
+                                    builder: Seq[Expression] => Expression): Unit = {
+        writes += 1
+        super.registerFunction(name, info, builder)
+      }
+    }
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    val registry = GraftExtensionsProbe.applyInjections(ext)
+    GraftExtensionsProbe.applyInjections(ext, registry)
     assert(registry.functionExists(FunctionIdentifier("dot_product")))
     val expr = registry.lookupFunction(FunctionIdentifier("dot_product"),
       Seq(org.apache.spark.sql.catalyst.expressions.Literal.create(Array(1.0, 2.0)),
         org.apache.spark.sql.catalyst.expressions.Literal.create(Array(3.0, 4.0))))
     assert(expr.eval(null) === 11.0)
+    // a pure-SQL session sees every graft name, and the table holds no other
+    assert(registry.listFunction().map(_.funcName).toSet === graftNames)
+    assert(NativeFunctions.table.map(_._1.funcName).toSet === graftNames)
+    // the lazy path finds the extension's builders and rewrites nothing
+    assert(writes === graftNames.size)
+    NativeFunctions.register(registry)
+    assert(writes === graftNames.size, "register must not rewrite the extension's entries")
+    NativeFunctions.table.foreach { case (id, _, builder) =>
+      assert(registry.lookupFunctionBuilder(id).exists(_ eq builder), id.funcName)
+    }
   }
 
   test("dot_product rejects wrong arity with an analysis error, not an index crash") {
@@ -27,6 +56,23 @@ class GraftExtensionsSpec extends SparkSpec {
         Seq(org.apache.spark.sql.catalyst.expressions.Literal.create(Array(1.0))))
     }
     assert(e.getMessage.contains("dot_product"))
+    // every name, on both paths: the extension-built registry and a fresh
+    // session registered lazily. Too many args must not be silently
+    // dropped; too few must not crash with IndexOutOfBoundsException.
+    val lazySession = spark.newSession()
+    NativeFunctions.register(lazySession)
+    for {
+      (path, reg) <- Seq("extension" -> registry,
+        "lazy" -> lazySession.sessionState.functionRegistry)
+      name <- graftNames.toSeq.sorted
+      n <- Seq(0, 5)
+    } {
+      val wrong = intercept[org.apache.spark.sql.AnalysisException] {
+        reg.lookupFunction(FunctionIdentifier(name), Seq.fill(n)(Literal(1)))
+      }
+      assert(wrong.getCondition.startsWith("WRONG_NUM_ARGS") &&
+        wrong.getMessage.contains(s"`$name`"), s"$path $name/$n: ${wrong.getMessage}")
+    }
   }
 
   test("hyperplane_signatures knobs reject non-constant / non-INT args readably") {
@@ -106,5 +152,16 @@ class GraftExtensionsSpec extends SparkSpec {
         "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
       assert(row.getDouble(0) === 11.0, "graft's implementation must win")
     } finally NativeFunctions.register(spark) // leave ours installed
+    // an impostor under each name in turn, next to graft's own entries
+    val registry = spark.sessionState.functionRegistry
+    NativeFunctions.table.foreach { case (id, _, builder) =>
+      try {
+        registry.createOrReplaceTempFunction(id.funcName,
+          (_: Seq[Expression]) => Literal(-1), "scala_udf")
+        NativeFunctions.register(spark)
+        assert(registry.lookupFunctionBuilder(id).exists(_ eq builder),
+          s"graft's ${id.funcName} must win")
+      } finally NativeFunctions.register(spark)
+    }
   }
 }

@@ -214,7 +214,7 @@ class NativeFunctionsSpec extends SparkSpec {
     // accepted arities instead.
     // gearChunkEnds/hilbertKey register on first Column-API use
     graft.functions.NativeFunctions.gearChunkEnds(spark, lit(Array[Byte]()), 6)
-    graft.functions.Hilbert.register(spark)
+    NativeFunctions.register(spark)
     val threeArgGear = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT gear_chunk_ends(CAST('ab' AS BINARY), 6, 64)").collect()
     }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
   * construct a configured one.
   */
 object GraftExtensionsProbe {
-  def applyInjections(ext: SparkSessionExtensions): FunctionRegistry =
-    ext.registerFunctions(FunctionRegistry.builtin.clone())
+  def applyInjections(ext: SparkSessionExtensions,
+                      registry: FunctionRegistry = FunctionRegistry.builtin.clone())
+      : FunctionRegistry =
+    ext.registerFunctions(registry)
 }
