@@ -137,13 +137,19 @@ import org.apache.spark.sql.SparkSession
   *
   * == Load-independent work metrics (round 7) ==
   * Per rep, a [[WorkMetricsListener]] records shuffle-read/write bytes,
-  * spilled bytes (memory + disk), and task count. These are invariant
-  * under host load, so a PLAN regression — a new exchange, a lost
-  * broadcast, a lost pushdown — is provable from the artifact even when
-  * every wall time is thrashed (`WorkMetricsSpec` A/Bs a
+  * spilled bytes (memory + disk), task count and completed `stages`. These
+  * are invariant under host load, so a PLAN regression — a new exchange, a
+  * lost broadcast, a lost pushdown — is provable from the artifact even
+  * when every wall time is thrashed (`WorkMetricsSpec` A/Bs a
   * broadcast-disabled join on exactly this principle). The listener bus is
   * drained before each snapshot (BusFlush), so deltas are
   * read-after-write consistent with the rep's own tasks.
+  *
+  * The same listener also records times, which are NOT load-independent:
+  * `executor_run_ms` and `executor_cpu_ms` (summed over the rep's tasks)
+  * and `driver_phases_ms` (analysis/optimization/planning summed over the
+  * rep's completed query executions). Together with wall time they say
+  * whether a rep was executor-bound or driver-bound.
   *
   * `cpu_ms` caveat (learned round 5): process CPU is NOT load-proof — on a
   * contended host cache thrash inflates cycles-per-instruction 13–47×. It
@@ -155,7 +161,9 @@ import org.apache.spark.sql.SparkSession
   * count could attribute a rep's last batches to the next rep). Their wall
   * time includes a per-micro-batch state-store commit floor (SCALE.md);
   * this field makes the fixed-vs-data cost split visible. Batch queries
-  * report 0.
+  * report 0. `stream_phase_ms` (also host-dependent) splits the same
+  * runs' time by micro-batch phase (`latestOffset`, `queryPlanning`,
+  * `addBatch`, `walCommit`), summed from the same progress history.
   *
   * `SPARK_GRAFT_BENCH_ONLY` (comma-separated query names) re-measures a
   * subset — dispute-resolution path for a suspicious number. Names that
@@ -493,6 +501,7 @@ object Bench {
   /** One rep's complete telemetry. `loads` = (start, max-during, end). */
   private final case class Rep(sec: Double, ok: Boolean, gcMs: Long,
                                cpuMs: Long, microBatches: Long,
+                               streamPhaseMs: Map[String, Long],
                                loads: Seq[Double], probeMs: Double,
                                parMs: Double,
                                work: WorkSnapshot, leftRdds: Int,
@@ -555,8 +564,7 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val work = new WorkMetricsListener
-    spark.sparkContext.addSparkListener(work)
+    val work = WorkMetricsListener.attach(spark)
     // Warm shared machinery (parquet reader, codegen compiler, udaf path,
     // shuffle) on sf0.001 so per-query timings measure the query, not
     // whichever query happens to run first paying global JIT warmup.
@@ -685,6 +693,7 @@ object Bench {
     def oneRep(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Rep = {
       val gc0 = gcMillis(); val cpu0 = cpuMillis()
       val mb0 = graft.streaming.StreamTelemetry.microBatchesCompleted.get()
+      val sp0 = graft.streaming.StreamTelemetry.streamPhaseSnapshot()
       val w0 = work.snapshot(spark.sparkContext)
       val load0 = loadAvg1()
       val sampler = new LoadSampler
@@ -700,6 +709,8 @@ object Bench {
       val gc = gcMillis() - gc0
       val cpu = if (cpu0 < 0) -1L else cpuMillis() - cpu0
       val mb = graft.streaming.StreamTelemetry.microBatchesCompleted.get() - mb0
+      val sp = graft.streaming.StreamTelemetry.streamPhaseSnapshot()
+        .map { case (k, v) => k -> (v - sp0(k)) }
       // work snapshot drains the listener bus, AFTER the clock stops
       val w1 = work.snapshot(spark.sparkContext)
       val probe = probeMillis()
@@ -718,7 +729,7 @@ object Bench {
       // steal, the thing being measured, hits both
       val par = math.min(probeParallelMillis(), probeParallelMillis())
       if (par < parFloor) parFloor = par
-      Rep(sec, ok, gc, cpu, mb, Seq(load0, loadMid, load1), probe, par,
+      Rep(sec, ok, gc, cpu, mb, sp, Seq(load0, loadMid, load1), probe, par,
         w1 - w0, nRdds, bytes)
     }
 
@@ -923,6 +934,7 @@ object Bench {
     def perRep[T](f: Rep => T): String =
       objRaw(finalReps.view.mapValues(rs => arr(rs.map(f))).toSeq)
     def fmtX(v: Double): String = f"$v%.2f"
+    def objL(m: Map[String, Long]): String = objRaw(m.view.mapValues(_.toString))
 
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val untrustedJson = untrusted.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -969,6 +981,11 @@ object Bench {
       s""","spill_mem_bytes":${perRep(_.work.spillMemBytes)}""" +
       s""","spill_disk_bytes":${perRep(_.work.spillDiskBytes)}""" +
       s""","tasks":${perRep(_.work.tasks)}""" +
+      s""","stages":${perRep(_.work.stages)}""" +
+      s""","executor_run_ms":${perRep(_.work.executorRunMs)}""" +
+      s""","executor_cpu_ms":${perRep(_.work.executorCpuMs)}""" +
+      s""","driver_phases_ms":${perRep(r => objL(r.work.driverPhasesMs))}""" +
+      s""","stream_phase_ms":${perRep(r => objL(r.streamPhaseMs))}""" +
       s""","persistent_rdds":${perRep(_.leftRdds)}""" +
       s""","storage_bytes":${perRep(_.leftBytes)}""" +
       "}"

@@ -111,7 +111,7 @@ object ScaleSmoke {
         if (cand <= fullScreenCap) timed {
           Dedup.incrementalEmbeddingPairsIndexed(
             fresh, idx, "vec_id", "embedding", 0.4).count()
-        } else ((-1L, -1.0, WorkSnapshot(0, 0, 0, 0, 0)))
+        } else ((-1L, -1.0, WorkSnapshot.zero))
       println(f"""{"mode":"indexab","family":"emb","knobs":"$label","dir":"$dir","n":$n,"n_fresh":$nF,"planes_per_table":${idx.planesPerTable},"tables":${idx.tables},"build_sec":$buildSec%.2f,"candidates":$cand,"cand_sec":$candSec%.2f,"screen_sec":$sec%.2f,"pairs":$pairs,"shuffle_read_bytes":${w.shuffleReadBytes},"shuffle_write_bytes":${w.shuffleWriteBytes},"spill_disk_bytes":${w.spillDiskBytes},"tasks":${w.tasks}}""")
     }
 
@@ -133,7 +133,7 @@ object ScaleSmoke {
         if (cand <= fullScreenCap) timed {
           Similarity.mihHammingScreenIndexed(
             fresh, idx, "vec_id", "embedding", radius = 3).count()
-        } else ((-1L, -1.0, WorkSnapshot(0, 0, 0, 0, 0)))
+        } else ((-1L, -1.0, WorkSnapshot.zero))
       println(f"""{"mode":"indexab","family":"mih","knobs":"$label","dir":"$dir","n":$n,"n_fresh":$nF,"bands":4,"band_bits":$bits,"build_sec":$buildSec%.2f,"candidates":$cand,"cand_sec":$candSec%.2f,"screen_sec":$sec%.2f,"pairs":$pairs,"shuffle_read_bytes":${w.shuffleReadBytes},"shuffle_write_bytes":${w.shuffleWriteBytes},"spill_disk_bytes":${w.spillDiskBytes},"tasks":${w.tasks}}""")
     }
     fresh.unpersist(blocking = false)
@@ -480,8 +480,7 @@ object ScaleSmoke {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val work = new WorkMetricsListener
-    spark.sparkContext.addSparkListener(work)
+    val work = WorkMetricsListener.attach(spark)
 
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
 

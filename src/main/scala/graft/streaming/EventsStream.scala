@@ -153,8 +153,9 @@ object EventsStream {
       val ckpt = java.nio.file.Files
         .createTempDirectory(ephemeralCheckpointRoot, "graft-ckpt-")
       val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      // Checkpoint-manager choice (optimization r20, measured in
-      // StreamFloorDiag): Spark's default FileContext-based manager costs
+      // Checkpoint-manager choice (optimization r20, measured per phase in
+      // bench/floor_diag_r21.txt; the bench's `stream_phase_ms` keeps
+      // watching it per rep): Spark's default FileContext-based manager costs
       // ~30 ms PER metadata write even on tmpfs — offsets WAL, commit log,
       // and every state-store delta all pay it, ~0.3–0.5 s per
       // AvailableNow run before any data work. The FileSystem-based
@@ -193,7 +194,7 @@ object EventsStream {
         // batch 0, so batchId + 1 = batches this run.
         val batches = Option(q.lastProgress).map(_.batchId + 1L).getOrElse(0L)
         StreamTelemetry.microBatchesCompleted.addAndGet(batches)
-        ()
+        StreamTelemetry.addPhases(q.recentProgress.toSeq)
       } finally {
         spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
         prevMgr match {

@@ -53,4 +53,27 @@ class EntrySpec extends SparkSpec {
     assert(stale.isEmpty,
       s"README query counts out of date (registry has $n): ${stale.mkString(", ")}")
   }
+
+  // Measurements belong in `graft.Bench`'s per-rep profile, not in one-off
+  // probe mains. Every runnable main is named here, so a new one has to be
+  // added to this list on purpose. `def main(` keeps the parenthesis:
+  // `maintain*` methods would otherwise match.
+  test("runnable mains under src/main are exactly the allowlist") {
+    val allowed = Set("Bench", "Verify", "ScaleSmoke", "ScaledCorpus", "ExplainPlans",
+      "CorpusPipelineDemo", "CotripDemo", "RetrievalPipelineDemo", "StreamingDemo",
+      "WarehouseMaintenanceDemo")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val walk = java.nio.file.Files.walk(root)
+    val mains = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8).contains("def main("))
+        .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    } finally walk.close()
+    assert(mains === allowed,
+      s"unlisted mains: ${(mains -- allowed).toSeq.sorted.mkString(", ")}; " +
+        s"listed but gone: ${(allowed -- mains).toSeq.sorted.mkString(", ")}")
+  }
 }

@@ -31,6 +31,37 @@ class StreamingSpec extends SparkSpec {
     assert(batch.except(streamed).count() === 0)
   }
 
+  test("stream phase telemetry: summed addBatch ms == the run's own progress") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import graft.streaming.StreamTelemetry
+    // the run's progress entries, as the query posts them
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == "phase_probe")
+          progress.add(e.progress.durationMs.getOrDefault("addBatch", 0L))
+    }
+    spark.streams.addListener(listener)
+    try {
+      val before = StreamTelemetry.streamPhaseSnapshot()
+      EventsStream.runAvailableNow(
+        EventsStream.windowedCounts(EventsStream.readEvents(spark, dir)),
+        "phase_probe", outputMode = "complete")
+      val added = StreamTelemetry.streamPhaseSnapshot()
+        .map { case (k, v) => k -> (v - before(k)) }
+      org.apache.spark.graftbench.BusFlush.flush(spark.sparkContext)
+      var expected = 0L
+      progress.forEach(ms => expected += ms)
+      assert(!progress.isEmpty, "the run posted no progress")
+      assert(added.keySet === StreamTelemetry.StreamPhases.toSet)
+      assert(added("addBatch") === expected)
+      assert(expected > 0L, "a run with data spent no time in addBatch")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("runAvailableNow bounds state width for the run and restores the session") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     // the run completes at the bounded width with the same rows...

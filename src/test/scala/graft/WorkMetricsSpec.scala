@@ -50,18 +50,28 @@ class WorkMetricsSpec extends SparkSpec {
 
   test("snapshot deltas attribute work to the interval that did it") {
     val sc = spark.sparkContext
-    val listener = new WorkMetricsListener
-    sc.addSparkListener(listener)
+    val listener = WorkMetricsListener.attach(spark)
     try {
       val s0 = listener.snapshot(sc)
-      spark.range(0, 1000).groupBy((col("id") % 10).as("k")).count().collect()
+      // a grouped count carrying 100 sums: phase times are whole ms, and a
+      // warm JVM analyses and plans a bare grouped count in under 1 ms
+      spark.range(0, 1000000).groupBy((col("id") % 10).as("k"))
+        .agg(count(lit(1)), (0 until 100).map(i => sum(col("id") + i)): _*)
+        .collect()
       val s1 = listener.snapshot(sc)
       val idle = listener.snapshot(sc)
       val d = s1 - s0
       assert(d.tasks > 0)
+      // a grouped count is a map stage and a reduce stage
+      assert(d.stages >= 2, s"grouped count completed too few stages: $d")
+      assert(d.executorRunMs > 0, s"no executor run time: $d")
+      // the query's driver phases land in the interval that ran it
+      assert(d.driverPhasesMs.keySet === WorkSnapshot.DriverPhases.toSet)
+      assert(d.driverPhasesMs("analysis") + d.driverPhasesMs("planning") > 0,
+        s"no analysis/planning time recorded: $d")
       val dIdle = idle - s1
-      assert(dIdle.tasks == 0 && dIdle.shuffleReadBytes == 0L,
+      assert(dIdle === WorkSnapshot.zero,
         s"no Spark work ran between snapshots, but delta = $dIdle")
-    } finally sc.removeSparkListener(listener)
+    } finally listener.detach(spark)
   }
 }
